@@ -60,12 +60,16 @@ def split_ownership(
       cells exist in the coal tracker).
     * ``equal_share=True`` — hydro/nuclear/solar/wind/bio/geo semantics
       (``GEM/Hydroplants_GEM.R:159-193``): missing percents default to
-      an equal split ``1/n`` among the row's owners, computed with a
-      window count per original row (no collapse).
+      an equal split ``1/n`` among the row's owners, where ``n`` is
+      ``size(split(owner))`` taken before the explode — exactly the
+      number of exploded parts, trailing separators and empty strings
+      included (no collapse).
 
-    Scale: the only shuffle is the window partition on ``row_id`` in
-    the equal-share variant, and because ``row_id`` is unique-ish the
-    key space is maximal → no skew. The explode itself is narrow.
+    Scale: narrow in both variants — no exchange, no window, no join.
+    The owner count is a per-row expression, so the explode and the
+    share math stay in one codegen stage, and whatever partitioning the
+    input carries (e.g. ``harmonize_coordinates``' location shuffle)
+    survives for the downstream group-sum.
 
     ``pct_grammar`` selects the percent-extraction grammar (the
     reference scripts use two different regexes — see
@@ -74,9 +78,10 @@ def split_ownership(
     Construction note (r17, guide §1.2 "per-task work" — driver
     edition): every Column below is built as ONE server-side
     ``F.expr`` parse instead of a chain of py4j Column-object calls.
-    The analyzed plan is IDENTICAL to the Column-built form (asserted
-    in tests/test_round17_fixes.py); only the number of driver
-    round-trips changes. SQL-literal traps encoded here: ``100.0``
+    The strict variant's analyzed plan is IDENTICAL to the Column-built
+    form; the equal-share variant returns IDENTICAL values to the
+    Column-built row-id window form (both asserted in
+    tests/test_round17_fixes.py). SQL-literal traps encoded here: ``100.0``
     lexes as DECIMAL(4,1) in Spark SQL, so doubles are written with
     the ``D`` suffix; regex literals pay one extra escaping level
     (``_sql_str``).
@@ -89,26 +94,28 @@ def split_ownership(
         f"case when {pct_extract} != '' "
         f"then cast({pct_extract} as double) / 100.0D end"
     )
-    exploded = add_row_id(df, row_id_col).withColumn(
-        part,
-        F.expr(f"explode(split({_q(owner_col)}, {_sql_str(S.OWNER_SEP)}))"),
-    )
+    split_sql = f"split({_q(owner_col)}, {_sql_str(S.OWNER_SEP)})"
+    src = add_row_id(df, row_id_col)
+    helpers = ["_owner_part", "_pct"]
+    if equal_share:
+        # only this branch adds the helper, so the strict variant's plan
+        # is untouched; a NULL owner explodes to no rows either way
+        src = src.withColumn("_n_owners", F.expr(f"size({split_sql})"))
+        helpers.append("_n_owners")
+        share = F.expr("coalesce(_pct, 1.0D / _n_owners)")
+    else:
+        share = F.col("_pct")
+    exploded = src.withColumn(part, F.expr(f"explode({split_sql})"))
     exploded = exploded.withColumns(
         {out_owner: F.expr(name_sql), "_pct": F.expr(pct_sql)}
     )
-    if equal_share:
-        share = F.expr(
-            f"coalesce(_pct, 1.0D / count(1) over (partition by {_q(row_id_col)}))"
-        )
-    else:
-        share = F.col("_pct")
     return (
         exploded.withColumn(out_share, share)
         .withColumn(
             out_alloc,
             F.expr(f"try_cast({_q(capacity_col)} as double) * {_q(out_share)}"),
         )
-        .drop("_owner_part", "_pct")
+        .drop(*helpers)
     )
 
 
@@ -120,54 +127,53 @@ def harmonize_coordinates(
 ) -> DataFrame:
     """Coordinate harmonization (``GEM/Coalplants_GEM.R:63-76``, in all
     8 scripts): per location, if units disagree on (lat, lon) take the
-    mean, else the single value; then join the harmonized coords back
-    onto the unit rows, replacing the originals.
+    mean, else the single value, replacing the originals on every unit
+    row. The reference joins a per-location summary back; here each
+    summary value is a window aggregate over the location, with the
+    join's semantics kept: a NULL location gets NULL coordinates, and
+    the columns come out in the join's order (location, the rest,
+    lat, lon).
 
     R parity note: the reference's ``mean()`` has no ``na.rm``, so one
     NULL coordinate poisons the mean for that location — emulated with
     the ``when(count(col) < count(*), NULL)`` guard.
 
-    Scale: one aggregation shuffle on the location key + one join. The
-    aggregated side is ~|locations| rows — smaller than units, but it
-    GROWS with the data, so no forced broadcast hint here: AQE's
-    runtime size check picks broadcast when the summary fits under
-    ``spark.sql.autoBroadcastJoinThreshold`` and falls back to a
-    shuffled join when it doesn't (a forced hint would OOM the driver
-    at 100× location cardinality).
+    Scale: one hash shuffle on the location key and nothing else — no
+    join, so no broadcast decision and no second pass over the input.
+    The window holds one location's rows at a time, so the skew bound is
+    rows per location (units of one plant, not a growing dimension).
+    The output stays hash-partitioned by location, which a downstream
+    group-sum keyed on the location reuses without an exchange of its
+    own (``plans.gem.run_fuel_pipeline``).
     """
     # "more than one distinct (lat, lon)" as min(struct) != max(struct):
-    # a count_distinct here would force an Expand + two-phase aggregate;
-    # min/max stay in one partial-aggregation pass and detect exactly
-    # the same condition (structs are never null, so min/max see every
-    # row and differ iff two rows disagree).
+    # a count_distinct would not run as a window aggregate at all;
+    # min/max detect exactly the same condition (structs are never
+    # null, so min/max see every row and differ iff two rows disagree).
     #
-    # Construction note (r17): each aggregate/projection Column is one
-    # server-side F.expr parse — same analyzed plan as the Column-built
-    # form (tests/test_round17_fixes.py), ~3× fewer py4j round-trips
-    # (this was the chattiest kernel: 401 driver commands per call).
-    lat, lon = _q(lat_col), _q(lon_col)
-    pair = f"struct({lat} as a, {lon} as b)"
-    na_mean = (
-        "case when count({c}) < count(1) then cast(null as double) "
-        "else avg({c}) end"
+    # The pair is one named column: written inline, Catalyst would
+    # project (and shuffle) a separate struct copy per min/max call.
+    # Every window aggregate shares one spec, so Catalyst plans a single
+    # Window operator; the projection is one selectExpr parse (one
+    # driver round-trip, not one per Column).
+    loc, lat, lon = _q(location_col), _q(lat_col), _q(lon_col)
+    w = f"over (partition by {loc})"
+
+    def harmonized(c: str) -> str:
+        na_mean = (
+            f"case when count({c}) {w} < count(1) {w} then cast(null as double) "
+            f"else avg({c}) {w} end"
+        )
+        return (
+            f"case when {loc} is null then cast(null as double) "
+            f"when min(_pair) {w} != max(_pair) {w} then {na_mean} "
+            f"else first({c}) {w} end"
+        )
+
+    rest = [_q(c) for c in df.columns if c not in (location_col, lat_col, lon_col)]
+    return df.withColumn("_pair", F.expr(f"struct({lat} as a, {lon} as b)")).selectExpr(
+        loc, *rest, f"{harmonized(lat)} as {lat}", f"{harmonized(lon)} as {lon}"
     )
-    summary = df.groupBy(location_col).agg(
-        F.expr(f"min({pair}) != max({pair})").alias("_coords_differ"),
-        F.expr(na_mean.format(c=lat)).alias("_lat_mean"),
-        F.expr(na_mean.format(c=lon)).alias("_lon_mean"),
-        F.expr(f"first({lat})").alias("_lat_first"),
-        F.expr(f"first({lon})").alias("_lon_first"),
-    )
-    summary = summary.select(
-        location_col,
-        F.expr(
-            "case when _coords_differ then _lat_mean else _lat_first end"
-        ).alias(lat_col),
-        F.expr(
-            "case when _coords_differ then _lon_mean else _lon_first end"
-        ).alias(lon_col),
-    )
-    return df.drop(lat_col, lon_col).join(summary, on=location_col, how="left")
 
 
 def expand_years(
@@ -357,7 +363,7 @@ def surrogate_ids(
     # with the data — AQE broadcasts it at runtime while it fits under
     # autoBroadcastJoinThreshold and falls back to a distributed hash
     # join when it doesn't (a hint here would OOM the driver at 100×
-    # key cardinality, the same reasoning as harmonize_coordinates).
+    # key cardinality).
     return df.join(dim, on=name_col, how="left")
 
 

@@ -61,9 +61,14 @@ from gem_data_wrangle_spark.operators.joins import join_lookup_dim
 from gem_data_wrangle_spark.operators.kernels import _q, _sql_str
 
 
-def _sql_in(values) -> str:
-    """Sequence of strings as a SQL IN-list body."""
-    return ", ".join(_sql_str(v) for v in values)
+def _sql_in(col_sql: str, values) -> str:
+    """``col_sql IN (values…)`` as SQL. An empty sequence renders as
+    ``false``, which is what ``IN`` evaluates to on an empty list
+    (``in ()`` itself does not parse)."""
+    if not values:
+        return "false"
+    return f"{col_sql} in ({', '.join(_sql_str(v) for v in values)})"
+
 
 # The 19-column output contract, identical in every reference script
 # (``GEM/Coalplants_GEM.R:214-219``, ``GEM/TotalData_GEM.R:38-41``).
@@ -180,7 +185,7 @@ def run_fuel_pipeline(df: DataFrame, cfg: FuelConfig, country_dim: DataFrame) ->
         # latency work — analyzed plan identical to the Column form,
         # same mechanism as the kernels.py rewrite)
         start = _q(cfg.start_year_col)
-        missing_sql = f"{start} in ({_sql_in(cfg.start_drop_sentinels)})"
+        missing_sql = _sql_in(start, cfg.start_drop_sentinels)
         if cfg.start_drop_null:
             missing_sql = f"({missing_sql} or {start} is null)"
         else:
@@ -190,7 +195,7 @@ def run_fuel_pipeline(df: DataFrame, cfg: FuelConfig, country_dim: DataFrame) ->
             missing_sql = f"coalesce({missing_sql}, false)"
         out = C.filter_not_and(
             out,
-            F.expr(f"Status in ({_sql_in(cfg.future_statuses)})"),
+            F.expr(_sql_in("Status", cfg.future_statuses)),
             F.expr(missing_sql),
         )
     # the ">0" sentinel replace runs AFTER the start-year step (:46→:50)

@@ -13,21 +13,21 @@ from pyspark.sql import SparkSession
 
 
 def _int_env(names: tuple[str, ...], default: int) -> int:
-    """First numeric value among the named env vars, else ``default``.
+    """First positive integer among the named env vars, else ``default``.
 
     ``SPARK_GRAFT_CPUS`` feeds the ``local[...]`` master string, where
     non-numeric values like ``*`` are legal — but
-    ``spark.sql.shuffle.partitions`` needs an integer, so a raw
-    passthrough would build a session that dies with a
-    NumberFormatException at its first shuffle (ADVICE r16)."""
+    ``spark.sql.shuffle.partitions`` needs a positive integer: a raw
+    passthrough would build a session that dies at its first shuffle
+    (a NumberFormatException for ``*``, a partition-count error for
+    ``0`` or ``-1``). Such values fall through to the next variable."""
     for name in names:
-        raw = os.environ.get(name)
-        if raw is None:
-            continue
         try:
-            return int(raw)
+            value = int(os.environ.get(name, ""))
         except ValueError:
             continue
+        if value > 0:
+            return value
     return default
 
 

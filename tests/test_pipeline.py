@@ -7,6 +7,8 @@ the GEM location ID, ``asset_name`` the Plant/Project name, and units
 of one location aggregate together (``GEM/Coalplants_GEM.R:158-171``).
 """
 
+import dataclasses
+
 from pyspark.sql import functions as F
 
 from gem_data_wrangle_spark.data.country_codes import country_dim
@@ -118,6 +120,26 @@ def test_coal_keeps_null_and_zero_capacity(spark):
     hydro_out = run_fuel_pipeline(hydro_df, HYDRO, country_dim(spark))
     hydro_kept = {r["asset_id"] for r in hydro_out.collect()}
     assert {"L8", "L9"}.isdisjoint(hydro_kept)
+
+
+@pytest.mark.parametrize("start_drop_null", [False, True])
+def test_empty_start_drop_tuples_are_always_false(spark, start_drop_null):
+    """Empty ``start_drop_sentinels``/``future_statuses`` render as a
+    valid always-false IN (``in ()`` is a parse error): the pipeline
+    plans, runs, and equals a config whose values never match."""
+    def cfg(values):
+        return dataclasses.replace(
+            COAL, start_drop_sentinels=values, future_statuses=values,
+            start_drop_null=start_drop_null,
+        )
+
+    dim = country_dim(spark)
+    got = run_fuel_pipeline(_units(spark), cfg(()), dim)
+    want = run_fuel_pipeline(_units(spark), cfg(("no such value",)), dim)
+    rows = sorted((tuple(r) for r in got.collect()), key=repr)
+    assert rows == sorted((tuple(r) for r in want.collect()), key=repr)
+    # no future status → the announced unit with an 'unknown' start stays
+    assert "L2" in {r[0] for r in rows}
 
 
 def test_hydro_equal_share_variant(spark):

@@ -3,6 +3,8 @@ documented in PLANS.md must survive refactors."""
 
 import re
 
+import pytest
+
 import __spark_entry__ as entrymod
 
 
@@ -51,12 +53,22 @@ def test_harmonize_has_no_expand(spark, sf_dir):
     assert "Expand" not in plan
 
 
-def test_harmonize_broadcast_is_aqe_gated(spark, sf_dir):
-    """harmonize_coordinates must NOT force a broadcast hint: the
-    summary side is one row per location, which grows with the data —
-    the hint must come from AQE's runtime size check (small summary →
-    broadcast) and disappear when the summary exceeds the threshold
-    (no driver OOM at 100× location cardinality)."""
+def test_harmonize_is_one_location_shuffle(spark, sf_dir):
+    """The per-location summary is a window over ONE hash shuffle on
+    the location — no join back, no sort-based aggregate of the struct
+    min/max."""
+    plan = _plan(spark, "harmonize_coordinates", sf_dir)
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
+    assert "Join" not in plan
+    assert "SortAggregate" not in plan
+
+
+def test_harmonize_plans_no_join(spark):
+    """harmonize_coordinates must not join at all: a join-back of the
+    per-location summary would need either a broadcast of a side that
+    grows with the data or a second shuffle of the units. With the
+    broadcast threshold on or off, the kernel plans no join and no
+    broadcast."""
     from pyspark.sql import functions as F
 
     from gem_data_wrangle_spark.operators.kernels import harmonize_coordinates
@@ -69,20 +81,45 @@ def test_harmonize_broadcast_is_aqe_gated(spark, sf_dir):
             (F.col("id") % 180).cast("double").alias("Longitude"),
         )
     )
-    out = harmonize_coordinates(df, "loc")
-    # logical plan carries no user hint — broadcast decisions are left
-    # to the planner/AQE
-    logical = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "ResolvedHint" not in logical and "hints=[broadcast" not in logical
-    # with the threshold off, the planner must fall back to a
-    # non-broadcast join for this summary
+    logical = harmonize_coordinates(df, "loc")._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in logical
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        big_plan = harmonize_coordinates(df, "loc")._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastExchange" not in big_plan
+        for threshold in (old, "-1"):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+            physical = (
+                harmonize_coordinates(df, "loc")._jdf.queryExecution().executedPlan().toString()
+            )
+            assert "Join" not in physical and "BroadcastExchange" not in physical
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_split_ownership_equal_is_narrow(spark, sf_dir):
+    # the equal-share owner count is size(split(...)) before the
+    # explode: no row-id window, no shuffle
+    plan = _plan(spark, "split_ownership_equal", sf_dir)
+    assert "Window" not in plan
+    assert "Exchange" not in plan
+
+
+@pytest.mark.parametrize("name", [
+    n for n in entrymod.queries() if n.startswith("gem_") and n.endswith("_pipeline")
+])
+def test_fuel_pipeline_plans_three_exchanges(spark, sf_dir, name):
+    """Round-robin spread, the location hash shuffle and the country
+    broadcast — nothing else. The location-grain group-sum reuses the
+    harmonize window's hash partitioning: its final HashAggregate sits
+    directly on the partial one."""
+    plan = _plan(spark, name, sf_dir)
+    assert len(re.findall(r"(?:Broadcast)?Exchange ", plan)) == 3, plan
+    assert "Exchange RoundRobinPartitioning" in plan
+    assert len(re.findall(r"Exchange hashpartitioning\(GEM location ID", plan)) == 1
+    assert "BroadcastExchange" in plan
+    lines = plan.splitlines()
+    final = next(i for i, ln in enumerate(lines) if "HashAggregate(" in ln)
+    assert "HashAggregate(" in lines[final + 1], "\n".join(lines[final:final + 2])
+    assert "partial_sum" in lines[final + 1]
 
 
 def test_lsh_topk_builds_plan_without_running_jobs(spark):

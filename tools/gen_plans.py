@@ -18,7 +18,7 @@ from gem_data_wrangle_spark import get_spark  # noqa: E402
 CASES = {
     "agg_sum_groups": "flagship grouped sums — partial aggregation then one exchange",
     "filter_isin": "status whitelist — predicate reaches the scan as an In() filter",
-    "gem_coal_pipeline": "full pipeline — 2 of 9 orders columns read; year filter pushed below the aggregation, above the year explode",
+    "gem_coal_pipeline": "full pipeline — 2 of 9 orders columns read; year filter pushed below the aggregation, above the year explode; the harmonize window and the location-grain group-sum share ONE location shuffle",
     "gem_total_consolidation": "consolidation — surrogate-id dim and emission factors broadcast",
     "expand_years": "year expansion — narrow explode(sequence), no join, no exchange before the sink",
     "minhash_lsh_pairs": "LSH banding — narrow signature computation; the only exchanges are the candidate equi-join and final distinct",

@@ -16,6 +16,7 @@ the path parallelizes; near 1.0 means fixed-cost-bound at this size
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import subprocess
@@ -67,15 +68,23 @@ print("RESULT " + json.dumps(out))
 """
 
 
+def _csv(kind):
+    return lambda s: [kind(v) for v in s.split(",")]
+
+
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    """``[N] [--cores 8,32] [--queries a,b]``; each option also takes the
+    ``--opt=value`` form."""
+    p = argparse.ArgumentParser(description="replicated-input core-scaling runs")
+    p.add_argument("n", nargs="?", type=int, default=10, help="replication factor")
+    p.add_argument("--cores", type=_csv(int), default=[8, 32])
+    p.add_argument("--queries", type=_csv(str), default=list(DEFAULT_QUERIES))
+    return p.parse_args(argv)
+
+
 def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 and not sys.argv[1].startswith("--") else 10
-    cores = [8, 32]
-    queries = list(DEFAULT_QUERIES)
-    for arg in sys.argv[1:]:
-        if arg.startswith("--cores="):
-            cores = [int(c) for c in arg.split("=", 1)[1].split(",")]
-        if arg.startswith("--queries="):
-            queries = arg.split("=", 1)[1].split(",")
+    args = parse_args()
+    n, cores, queries = args.n, args.cores, args.queries
 
     out_dir = f"/tmp/scale_sf{n}x"
     # build the replicated inputs once (any core count works here)
