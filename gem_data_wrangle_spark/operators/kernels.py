@@ -84,8 +84,17 @@ def split_ownership(
     tests/test_round17_fixes.py). SQL-literal traps encoded here: ``100.0``
     lexes as DECIMAL(4,1) in Spark SQL, so doubles are written with
     the ``D`` suffix; regex literals pay one extra escaping level
-    (``_sql_str``).
+    (``_sql_str``), which assumes the session's
+    ``spark.sql.parser.escapedStringLiterals`` is ``false``; with it
+    ``true`` the regexes would parse to different patterns and silently
+    mis-split, so that setting is refused here with a ``ValueError``.
     """
+    escaped = df.sparkSession.conf.get("spark.sql.parser.escapedStringLiterals")
+    if escaped.strip().lower() == "true":
+        raise ValueError(
+            "split_ownership needs spark.sql.parser.escapedStringLiterals=false: "
+            "its regex literals are escaped for the default SQL lexer"
+        )
     part = "_owner_part"
     name_sql = f"trim(regexp_extract({_q(part)}, {_sql_str(S.OWNER_NAME_RE)}, 0))"
     pct_re = _sql_str(S._PCT_GRAMMARS[pct_grammar])

@@ -56,6 +56,16 @@ _DEFAULT_CONF = {
     "spark.sql.shuffle.partitions": str(
         _int_env(("SPARK_GRAFT_SHUFFLE_PARTITIONS", "SPARK_GRAFT_CPUS"), 32)
     ),
+    # Generated-class cache (an LRU keyed by generated source; Spark's
+    # default holds 100). One gem_total_consolidation_all8 pass cycles
+    # through ~150 distinct generated classes, so at 100 every entry was
+    # evicted before reuse and each pass recompiled ~120-145 of them
+    # (Janino, then the JIT again). 1000 holds that working set with
+    # room for the rest of a session's recurring queries.
+    "spark.sql.codegen.cache.maxEntries": "1000",
+    # kernels._sql_str and every regex passed through F.expr escape for
+    # the default (false); split_ownership refuses a session with true.
+    "spark.sql.parser.escapedStringLiterals": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
@@ -71,6 +81,14 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env) or
     ``local[*]``; an existing active session is reused with its config.
+
+    The JVM-wide generated-class cache is built here, on the calling
+    thread, while the session is active. Spark sizes that cache from
+    ``SQLConf.get`` at its first use; left lazy, the first use happens
+    on a thread with no active session (e.g. the plan-building pool in
+    ``_all8_fuel_frames``), which reads Spark's default of 100 entries
+    and ignores ``spark.sql.codegen.cache.maxEntries``. Touching the
+    ``CodeGenerator`` object is one py4j call and runs no Spark job.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -81,4 +99,7 @@ def get_spark(
         merged.update(conf)
     for k, v in merged.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen
+    codegen.CodeGenerator.MUTABLESTATEARRAY_SIZE_LIMIT()  # builds the cache
+    return spark

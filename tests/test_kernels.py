@@ -69,6 +69,23 @@ def test_split_ownership_equal_share(spark):
     assert total == pytest.approx(1.0)
 
 
+def test_split_ownership_refuses_escaped_string_literals(spark):
+    """Its regex literals are escaped for the default SQL lexer: a session
+    with escapedStringLiterals=true fails at plan-build time instead of
+    splitting owners with different patterns."""
+    key = "spark.sql.parser.escapedStringLiterals"
+    df = _owners_df(spark)
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        for equal_share in (False, True):
+            with pytest.raises(ValueError, match="escapedStringLiterals"):
+                K.split_ownership(df, "Owner", "cap", equal_share=equal_share)
+    finally:
+        spark.conf.set(key, saved)
+    assert K.split_ownership(df, "Owner", "cap", equal_share=True).count() == 8
+
+
 def test_harmonize_coordinates_mean_vs_single(spark):
     df = spark.createDataFrame(
         [

@@ -1,6 +1,7 @@
-"""Command-line parsing of the scripts under ``tools/``."""
+"""Command-line parsing and output of the scripts under ``tools/``."""
 
 import importlib.util
+import re
 from pathlib import Path
 
 import pytest
@@ -33,3 +34,22 @@ def test_scale_cores_defaults_and_rejects_garbage():
         mod.parse_args(["--cores"])
     with pytest.raises(SystemExit):
         mod.parse_args(["--cores", "eight"])
+
+
+def test_profile_query_reports_generated_class_compiles(spark, sf_dir, monkeypatch, capsys):
+    mod = _load("profile_query")
+    n0, ms0 = mod.codegen_counters(spark)
+    spark.range(1).selectExpr("id * 7919 + 104729").collect()  # one new class at least
+    n1, ms1 = mod.codegen_counters(spark)
+    assert n1 > n0 and ms1 > ms0
+
+    monkeypatch.setattr(mod, "get_spark", lambda *a, **k: spark)
+    mod.main(["agg_sum_groups", "--sf", sf_dir, "--runs", "2", "--no-warm"])
+    lines = capsys.readouterr().out.splitlines()
+    pattern = (
+        r"run {}: construct=\d+\.\d{{3}}s write=\d+\.\d{{3}}s total=\d+\.\d{{3}}s "
+        r"compiled=\d+ classes compile=\d+ms"
+    )
+    assert len(lines) == 2, lines
+    for i, line in enumerate(lines):
+        assert re.fullmatch(pattern.format(i), line), line
